@@ -105,8 +105,8 @@ object MetricsService {
       s"duplicate percentile quantiles in ${percentiles.values}")
   }
 
-  /** Write-schema of the catalog tier (addMetric's toDF), used to read a
-    * not-yet-created catalog path as an empty frame. */
+  /** Write-schema of the catalog tier (addMetric's toDF) — every catalog
+    * read runs with it (schema-on-read, [[GraftStorage.readStore]]). */
   private[api] val CatalogSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -118,7 +118,8 @@ object MetricsService {
       StructField("ingest_seq", LongType)))
   }
 
-  /** Write-schema of the tenants tier (createTenant's toDF). */
+  /** Write-schema of the tenants tier (createTenant's toDF), read the same
+    * way. */
   private[api] val TenantsSchema: org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     StructType(Seq(
@@ -176,8 +177,7 @@ class MetricsService(spark: SparkSession, root: String,
   def createTenant(tenantId: String, retentions: Map[String, Int] = Map.empty,
                    overwrite: Boolean = true): Unit = {
     val exists = !overwrite &&
-      (try getTenants().filter(col("id") === tenantId).limit(1).count() > 0
-       catch { case _: org.apache.spark.sql.AnalysisException => false }) // none yet
+      getTenants().filter(col("id") === tenantId).limit(1).count() > 0
     if (exists) throw new MetricsService.TenantAlreadyExistsException(tenantId)
     val s = spark
     import s.implicits._
@@ -191,16 +191,7 @@ class MetricsService(spark: SparkSession, root: String,
       .partitionBy(col("id")).orderBy(col("ingest_seq").desc)
     // a store with no tenants yet lists as EMPTY (the reference answers
     // 204), not as a missing-path error — same rule as metricsIndex
-    val stored =
-      try spark.read.parquet(tenantsPath)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-              e.getCondition == "PATH_NOT_FOUND" =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            MetricsService.TenantsSchema)
-      }
-    stored
+    GraftStorage.readStore(spark, tenantsPath, MetricsService.TenantsSchema)
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .select("id", "retentions")
   }
@@ -219,9 +210,7 @@ class MetricsService(spark: SparkSession, root: String,
   def createMetric(id: MetricId, tags: Map[String, String],
                    dataRetention: Option[Int] = None,
                    overwrite: Boolean = true): Unit = {
-    val exists = !overwrite &&
-      (try findMetric(id).limit(1).count() > 0
-       catch { case _: org.apache.spark.sql.AnalysisException => false }) // no catalog yet
+    val exists = !overwrite && findMetric(id).limit(1).count() > 0
     if (exists) throw new MetricsService.MetricAlreadyExistsException(id.name)
     val s = spark
     import s.implicits._
@@ -240,16 +229,7 @@ class MetricsService(spark: SparkSession, root: String,
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("tenant_id"), col("mtype"), col("metric"))
       .orderBy(col("ingest_seq").desc)
-    val stored =
-      try spark.read.parquet(metricsPath)
-      catch {
-        case e: org.apache.spark.sql.AnalysisException
-            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-              e.getCondition == "PATH_NOT_FOUND" =>
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            MetricsService.CatalogSchema)
-      }
-    stored
+    GraftStorage.readStore(spark, metricsPath, MetricsService.CatalogSchema)
       .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
       .select("tenant_id", "mtype", "metric", "tags", "data_retention")
   }
@@ -315,14 +295,11 @@ class MetricsService(spark: SparkSession, root: String,
     * explicit createMetric, like the reference's implicit metrics — reads
     * as undefined, not as a missing-path error. */
   private def currentDefinition(id: MetricId): (Map[String, String], Option[Int]) =
-    try metricsIndex().filter(metricKey(id)).select("tags", "data_retention").collect()
+    metricsIndex().filter(metricKey(id)).select("tags", "data_retention").collect()
       .headOption.map { r =>
         (r.getMap[String, String](0).toMap,
           if (r.isNullAt(1)) None else Some(r.getInt(1)))
       }.getOrElse((Map.empty, None))
-    catch {
-      case _: org.apache.spark.sql.AnalysisException => (Map.empty, None)
-    }
 
   /** Single-metric definition lookup (reference findMetric:102-109).
     * INDEX-only — `createMetric(overwrite=false)`'s 409 existence check
@@ -728,7 +705,7 @@ class MetricsService(spark: SparkSession, root: String,
     GraftStorage.deleteMetric(spark, dataPath, id.tenantId,
       MetricType.fromCode(id.mtype), id.name)
     try {
-      val cat = spark.read.parquet(metricsPath)
+      val cat = spark.read.schema(MetricsService.CatalogSchema).parquet(metricsPath)
         .filter(!(col("tenant_id") === id.tenantId &&
           col("mtype") === id.mtype.toInt && col("metric") === id.name))
         .localCheckpoint()
@@ -744,12 +721,12 @@ class MetricsService(spark: SparkSession, root: String,
   def deleteTenant(tenantId: String): Unit = {
     GraftStorage.deleteTenant(spark, dataPath, tenantId)
     try {
-      val cat = spark.read.parquet(metricsPath)
+      val cat = spark.read.schema(MetricsService.CatalogSchema).parquet(metricsPath)
         .filter(col("tenant_id") =!= tenantId).localCheckpoint()
       cat.write.mode(SaveMode.Overwrite).parquet(metricsPath)
     } catch { case _: org.apache.spark.sql.AnalysisException => () } // no catalog yet
     try {
-      val rest = spark.read.parquet(tenantsPath)
+      val rest = spark.read.schema(MetricsService.TenantsSchema).parquet(tenantsPath)
         .filter(col("id") =!= tenantId).localCheckpoint()
       rest.write.mode(SaveMode.Overwrite).parquet(tenantsPath)
     } catch { case _: org.apache.spark.sql.AnalysisException => () } // none written yet
@@ -773,30 +750,21 @@ class MetricsService(spark: SparkSession, root: String,
    * are catalog-sized and broadcast; the datapoint stream never shuffles.
    */
   def retainedRaw(now: Long = System.currentTimeMillis()): DataFrame = {
-    val s = spark
-    import s.implicits._
     // tenant retention maps are keyed by the metric-type TEXT
     // ("gauge", "counter", ...); unknown keys are ignored
     val typeCode = MetricType.userTypes.foldLeft(lit(null).cast("int")) {
       (acc, t) => when(col("tname") === t.text, lit(t.code.toInt)).otherwise(acc)
     }
-    val tenantRet =
-      try getTenants()
-        .select(col("id").as("tenant_id"),
-          explode(col("retentions")).as(Seq("tname", "retention_days")))
-        .withColumn("mtype", typeCode).filter(col("mtype").isNotNull)
-        .select("tenant_id", "mtype", "retention_days")
-        .localCheckpoint() // tenants may be rewritten after planning
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        Seq.empty[(String, Int, Int)].toDF("tenant_id", "mtype", "retention_days") }
-    val overrides =
-      try metricsIndex().filter(col("data_retention").isNotNull)
-        .select(col("tenant_id"), col("mtype"), col("metric"),
-          col("data_retention").as("retention_days"))
-        .localCheckpoint()
-      catch { case _: org.apache.spark.sql.AnalysisException =>
-        Seq.empty[(String, Int, String, Int)]
-          .toDF("tenant_id", "mtype", "metric", "retention_days") }
+    val tenantRet = getTenants()
+      .select(col("id").as("tenant_id"),
+        explode(col("retentions")).as(Seq("tname", "retention_days")))
+      .withColumn("mtype", typeCode).filter(col("mtype").isNotNull)
+      .select("tenant_id", "mtype", "retention_days")
+      .localCheckpoint() // tenants may be rewritten after planning
+    val overrides = metricsIndex().filter(col("data_retention").isNotNull)
+      .select(col("tenant_id"), col("mtype"), col("metric"),
+        col("data_retention").as("retention_days"))
+      .localCheckpoint()
     MetricsOps.applyRetention(raw(), tenantRet, Some(overrides), now)
   }
 
@@ -1149,13 +1117,9 @@ class MetricsService(spark: SparkSession, root: String,
   def multiFromEarliestRange(tenantId: String, mtype: MetricType,
                              ids: DataFrame, now: Long): TimeRange = {
     val fallback = tenantRetentionDays(tenantId, mtype).getOrElse(DefaultRetentionDays)
-    val overrides =
-      try metricsIndex()
-        .filter(col("tenant_id") === tenantId && col("mtype") === mtype.code.toInt)
-        .select(col("metric"), col("data_retention"))
-      catch { case _: org.apache.spark.sql.AnalysisException => // no catalog yet
-        val s = spark; import s.implicits._
-        Seq.empty[(String, Integer)].toDF("metric", "data_retention") }
+    val overrides = metricsIndex()
+      .filter(col("tenant_id") === tenantId && col("mtype") === mtype.code.toInt)
+      .select(col("metric"), col("data_retention"))
     val maxDays = ids.select("metric").distinct()
       .join(overrides, Seq("metric"), "left")
       .agg(max(coalesce(col("data_retention"), lit(fallback))))
@@ -1166,11 +1130,10 @@ class MetricsService(spark: SparkSession, root: String,
 
   /** The tenant's retention for one metric type, if configured. */
   private def tenantRetentionDays(tenantId: String, t: MetricType): Option[Int] =
-    try getTenants().filter(col("id") === tenantId)
+    getTenants().filter(col("id") === tenantId)
       .select(element_at(col("retentions"), t.text))
       .collect().headOption
       .flatMap(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
-    catch { case _: org.apache.spark.sql.AnalysisException => None } // no tenants written yet
 
   /** Tagged variant (A6): group by per-point tag-value combinations over
     * the requested time range (GaugeHandler's stats-by-tags route carries

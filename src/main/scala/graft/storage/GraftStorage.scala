@@ -53,8 +53,7 @@ object GraftStorage {
    * output partition (no small-file explosion at 1000 executors).
    */
   def write(dp: DataFrame, path: String, mode: SaveMode = SaveMode.Append): Unit =
-    withSlice(dp)
-      .withColumn("ingest_seq", lit(nextIngestSeq()))
+    conform(withSlice(dp).withColumn("ingest_seq", lit(nextIngestSeq())))
       .repartition(col("tenant_id"), col("mtype"), col("time_slice"))
       .sortWithinPartitions(col("metric"), col("time"))
       .write
@@ -75,21 +74,32 @@ object GraftStorage {
     StructField("tenant_id", StringType), StructField("mtype", IntegerType),
     StructField("time_slice", LongType)))
 
-  /** Range scan entry: partition pruning on (tenant, type, slice range)
-    * happens before any file is opened. Partition columns come back from
-    * directory names as INT — normalize to the canonical types. An empty
-    * or not-yet-created tier reads as an empty canonical frame (a tenant
-    * delete can legitimately empty the store). */
-  def read(spark: SparkSession, path: String): DataFrame =
-    try spark.read.parquet(path)
-      .withColumn("time_slice", col("time_slice").cast("long"))
-      .withColumn("mtype", col("mtype").cast("int"))
+  /** Cast the canonical columns a frame carries to their [[Schema]] types,
+    * so every file the raw tier holds reads back under that schema (an
+    * untyped empty `map()` would otherwise land as a BOOLEAN-keyed map). */
+  private def conform(dp: DataFrame): DataFrame = {
+    val types = Schema.fields.map(f => f.name -> f.dataType).toMap
+    dp.select(dp.columns.toSeq.map(c => types.get(c).fold(col(c))(t => col(c).cast(t).as(c))): _*)
+  }
+
+  /** Schema-on-read for every store the engine owns. With the canonical
+    * `schema` given, opening a store launches no footer-reading inference
+    * job (an un-schema'd `read.parquet` runs one per call — a fixed cost
+    * on every serving request), partition columns parse straight to
+    * their canonical types, a column missing from an older file reads as
+    * NULL, and a directory with no data files (a dataless refresh leaves
+    * just `_SUCCESS`) reads as an empty canonical frame. A path that does
+    * not exist yet reads as the same empty frame. */
+  def readStore(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    try spark.read.schema(schema).parquet(path)
     catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition == "UNABLE_TO_INFER_SCHEMA" ||
-            e.getCondition == "PATH_NOT_FOUND" =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], Schema)
+      case e: org.apache.spark.sql.AnalysisException if e.getCondition == "PATH_NOT_FOUND" =>
+        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
+
+  /** Range scan entry: partition pruning on (tenant, type, slice range)
+    * happens before any file is opened. */
+  def read(spark: SparkSession, path: String): DataFrame = readStore(spark, path, Schema)
 
   /** Read with last-write-wins resolved per (tenant, mtype, metric, time) —
     * the exactly-once view of a raw tier that may hold not-yet-compacted
@@ -220,6 +230,44 @@ object GraftStorage {
 
   /** Rollup granularity: one pre-aggregate row per metric-hour. */
   val RollupMs: Long = 3600000L
+
+  /** A tier family's canonical schema in on-disk column order: the
+    * (metric, hour) key, the family's aggregate columns as its writer
+    * emits them, then the raw tier's partition columns. */
+  private def tierSchema(cols: (String, DataType)*): StructType =
+    StructType((Seq("metric" -> StringType, "hour" -> LongType) ++ cols ++
+      Seq("tenant_id" -> StringType, "mtype" -> IntegerType, "time_slice" -> LongType))
+      .map { case (n, t) => StructField(n, t) })
+
+  /** [[writeRollup]] — the gauge and counter sums tiers. */
+  val RollupSchema: StructType = tierSchema("samples" -> LongType,
+    "min_v" -> DoubleType, "max_v" -> DoubleType, "sum_v" -> DecimalType(38, 10))
+
+  /** [[writeRollupHist]] / [[writeRollupRateHist]] — the value and rate
+    * distribution tiers. */
+  val HistSchema: StructType = tierSchema("bin" -> LongType, "cnt" -> LongType)
+
+  /** [[writeRollupAvail]] — the availability hour summaries. */
+  val AvailSchema: StructType = tierSchema("up_ms" -> LongType,
+    "down_ms" -> LongType, "unknown_ms" -> LongType, "admin_ms" -> LongType,
+    "last_not_uptime" -> LongType, "not_up_count" -> LongType,
+    "samples" -> LongType, "first_ts" -> LongType,
+    "first_state" -> IntegerType, "last_state" -> IntegerType)
+
+  /** [[writeRollupCounter]] — the counter-increase hour summaries. */
+  val CounterSchema: StructType = tierSchema("increase" -> LongType,
+    "n_resets" -> LongType, "n_deltas" -> LongType, "first_val" -> LongType,
+    "last_val" -> LongType, "samples" -> LongType)
+
+  /** [[writeRollupRate]] — the gauge and counter rate tiers. */
+  val RateSchema: StructType = tierSchema("n_pairs" -> LongType,
+    "min_r" -> DoubleType, "max_r" -> DoubleType, "sum_r" -> DecimalType(38, 10),
+    "first_ts" -> LongType, "first_val" -> DoubleType, "last_ts" -> LongType,
+    "last_val" -> DoubleType, "samples" -> LongType)
+
+  private val HistMetaSchema: StructType = StructType(Seq(
+    StructField("v_min", DoubleType), StructField("v_max", DoubleType),
+    StructField("bins", IntegerType)))
 
   /**
    * Build/refresh the hourly rollup tier from the resolved raw tier: per
@@ -533,7 +581,7 @@ object GraftStorage {
     val p = new org.apache.hadoop.fs.Path(histMetaPath(histPath))
     if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)) None
     else {
-      val r = spark.read.parquet(p.toString).collect()
+      val r = spark.read.schema(HistMetaSchema).parquet(p.toString).collect()
       require(r.length == 1, s"histogram tier meta at $p must be one row")
       Some((r(0).getAs[Double]("v_min"), r(0).getAs[Double]("v_max"),
         r(0).getAs[Int]("bins")))
@@ -582,7 +630,7 @@ object GraftStorage {
     val scopeFilters =
       tenant.map(col("tenant_id") === _) ++ mtypeCode.map(col("mtype") === _)
     val h0 = scopeFilters.foldLeft(
-      spark.read.parquet(histPath)
+      readStore(spark, histPath, HistSchema)
         .filter(col("hour") >= startHour && col("hour") < b.end / RollupMs))(_ filter _)
     // optional id-set restriction (the tag-query → p95 dashboard path):
     // request-sized id set, broadcast semi-join pruning the tier scan
@@ -694,7 +742,7 @@ object GraftStorage {
     // prune to that tenant's partition directories at the LISTING, not
     // scan every tenant's hours (tenant_id leads the tier layout)
     val h0 = tenant.foldLeft(
-      spark.read.parquet(availPath)
+      readStore(spark, availPath, AvailSchema)
         .filter(col("hour") >= startHour && col("hour") < b.end / RollupMs))(
       (d, t) => d.filter(col("tenant_id") === t))
     // optional id-set restriction (the tag-query → SLO dashboard path):
@@ -807,7 +855,7 @@ object GraftStorage {
     // request-sized id set broadcasts into a semi-join pruning the tier
     // scan BEFORE the boundary window (rollupStats' posture)
     val h0 = tenant.foldLeft(
-      spark.read.parquet(ctrPath)
+      readStore(spark, ctrPath, CounterSchema)
         .filter(col("hour") >= range.start / RollupMs &&
           col("hour") < range.end / RollupMs))(
       (d, t) => d.filter(col("tenant_id") === t))
@@ -940,7 +988,7 @@ object GraftStorage {
     val scopeFilters =
       tenant.map(col("tenant_id") === _) ++ mtypeCode.map(col("mtype") === _)
     val h0 = scopeFilters.foldLeft(
-      spark.read.parquet(ratePath).filter(col("hour") < b.end / RollupMs))(_ filter _)
+      readStore(spark, ratePath, RateSchema).filter(col("hour") < b.end / RollupMs))(_ filter _)
     // request-sized id restriction, broadcast semi-join BEFORE the
     // boundary window (rollupStats' posture)
     val h = ids.fold(h0)(i =>
@@ -1014,7 +1062,7 @@ object GraftStorage {
     val scopeFilters =
       tenant.map(col("tenant_id") === _) ++ mtypeCode.map(col("mtype") === _)
     val r0 = scopeFilters.foldLeft(
-      spark.read.parquet(rollupPath)
+      readStore(spark, rollupPath, RollupSchema)
         .filter(col("hour") >= startHour && col("hour") < b.end / RollupMs))(_ filter _)
     // optional id-set restriction (the tag-query → dashboard path): the
     // resolved id set is request-sized, so it broadcasts into a semi-join
@@ -1049,10 +1097,11 @@ object GraftStorage {
   private def hourAligned(xs: Long*): Boolean = xs.forall(_ % RollupMs == 0)
 
   /** A tier can serve only when it HOLDS DATA: a refresh over a store
-    * with no rows of a family writes an empty dir (just _SUCCESS), and a
-    * parquet read of it dies on schema inference — such a family must
-    * fall back to raw, not 500. The data probe is the same partition
-    * glob the tenant guards use (metadata-only). */
+    * with no rows of a family writes an empty dir (just _SUCCESS), which
+    * reads as an empty canonical frame — serving it would answer empty
+    * buckets where raw has data, so such a family falls back to raw. The
+    * data probe is the same partition glob the tenant guards use
+    * (metadata-only). */
   private def tierExists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1292,7 +1341,7 @@ object GraftStorage {
       .partitionBy(col("tenant_id"), col("mtype"), col("metric"))
       .orderBy(col("hour"))
     val bounds = idFilter(scopedRead(ratePath,
-      spark.read.parquet(ratePath).filter(col("hour") < b.end / RollupMs)))
+      readStore(spark, ratePath, RateSchema).filter(col("hour") < b.end / RollupMs)))
       .withColumn("prev_last_val", lag(col("last_val"), 1).over(w))
       .withColumn("prev_last_ts", lag(col("last_ts"), 1).over(w))
       .withColumn("brate",
@@ -1307,20 +1356,16 @@ object GraftStorage {
       .select(col("bucket"), col("bin"), lit(1L).as("cnt"))
     // within-hour binned counts, re-aggregated to the bucket grid. A
     // refreshed-but-EMPTY hist tier (sparse store: no hour anywhere
-    // holds two points — [[rateHistTierServes]]) contributes nothing
-    // and must not be read: parquet schema inference dies on a dir
-    // holding only the _histmeta/_covered_from side files, and the
-    // boundary reconstruction above already carries every rate pair
-    // such a store has.
-    val merged =
-      if (tierTenantPartitions(spark, rateHistPath).isEmpty) bounds
-      else idFilter(scopedRead(rateHistPath,
-        spark.read.parquet(rateHistPath)
-          .filter(col("hour") >= startHour && col("hour") < b.end / RollupMs)))
-        .withColumn("bucket", expr(s"(hour - $startHour) div $stepHours"))
-        .select(col("bucket"), col("bin"), col("cnt"))
-        .unionByName(bounds)
-    merged
+    // holds two points — [[rateHistTierServes]]) holds only its side
+    // files, reads as an empty canonical frame and contributes nothing:
+    // the boundary reconstruction above carries every rate pair such a
+    // store has.
+    idFilter(scopedRead(rateHistPath,
+      readStore(spark, rateHistPath, HistSchema)
+        .filter(col("hour") >= startHour && col("hour") < b.end / RollupMs)))
+      .withColumn("bucket", expr(s"(hour - $startHour) div $stepHours"))
+      .select(col("bucket"), col("bin"), col("cnt"))
+      .unionByName(bounds)
       .groupBy(col("bucket"), col("bin"))
       .agg(sum(col("cnt")).as("cnt"))
       .withColumn("bin_lo", lit(vMin) + col("bin") * width)
